@@ -180,6 +180,17 @@ def tfidf_top_terms(
     )
 
 
+# curate_corpus's report columns after the id column, in output order.
+_CURATION_COLUMNS = (
+    "predicted_lang",
+    "quality_score",
+    "content_hash",
+    "dup_count",
+    "is_survivor",
+    "kept",
+)
+
+
 def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -205,9 +216,15 @@ def curate_corpus(
     token count) rides the single scan of the heavy text column instead
     of paying a second full read plus a join-back (guide §8 "move heavy
     bytes once"). The report columns themselves are unchanged
-    (pinned by test_curate_corpus_carry_rides_the_scan)."""
+    (pinned by test_curate_corpus_carry_rides_the_scan). A ``carry`` key
+    that names a report column or the id/text column raises
+    ``ValueError``."""
     text = F.col(text_col)
     carry = carry or {}
+    reserved = {id_col, text_col, *_CURATION_COLUMNS}
+    clash = sorted(reserved.intersection(carry))
+    if clash:
+        raise ValueError(f"curate_corpus carry keys collide with reserved columns: {clash}")
     enriched = docs.select(
         F.col(id_col),
         lang_id(text).alias("predicted_lang"),
@@ -227,16 +244,7 @@ def curate_corpus(
             & (F.col("predicted_lang") == keep_lang)
             & (F.col("quality_score") >= min_quality),
         )
-        .select(
-            id_col,
-            "predicted_lang",
-            "quality_score",
-            "content_hash",
-            "dup_count",
-            "is_survivor",
-            "kept",
-            *carry.keys(),
-        )
+        .select(id_col, *_CURATION_COLUMNS, *carry.keys())
     )
 
 

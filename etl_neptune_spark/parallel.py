@@ -34,8 +34,8 @@ def run_concurrent(*thunks: Callable[[], Any]) -> list[Any]:
     ``inheritable_thread_target`` carries the JVM thread-locals (job
     group/description) into the pool threads under pinned-thread mode —
     the PySpark-documented way to run driver-side job threads."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [
             pool.submit(inheritable_thread_target(t)) for t in thunks

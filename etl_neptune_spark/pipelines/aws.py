@@ -11,8 +11,10 @@ store, orders→the metrics/alarms side-channel.
 Every step is a certified operator (merge_keyed, gc_keep, tag
 precedence coalesce, join-update, reset-then-degrade); this module
 only sequences them — like the reference's ``run_etl``, which is pure
-step order. All steps are single declarative plans; the only driver
-action is the final store write per table.
+step order. All steps are single declarative plans, executed by the
+store write of each table. The returned ``stats`` are then read back
+from the version just written (one aggregate per table), so the
+merge/GC/health DAG runs once per run instead of once per count.
 """
 
 from __future__ import annotations
@@ -170,9 +172,10 @@ def run_aws_snapshot_etl(
     store.write(final, "nodes", version)
     store.write(edges, "infra_edges", version)
 
-    return {
-        "nodes": final.count(),
-        "edges": edges.count(),
-        "degraded": final.filter(F.col("health_status") == "degraded").count(),
-        "with_metrics": final.filter(F.col("order_count").isNotNull()).count(),
-    }
+    stats = store.read_version(spark, "nodes", version).agg(
+        F.count("*").alias("nodes"),
+        F.count_if(F.col("health_status") == "degraded").alias("degraded"),
+        F.count_if(F.col("order_count").isNotNull()).alias("with_metrics"),
+    ).first().asDict()  # bounded: single global-agg row
+    stats["edges"] = store.read_version(spark, "infra_edges", version).count()
+    return stats

@@ -53,7 +53,9 @@ def run_cfn_etl(
 ) -> int:
     """Extract declared edges and MERGE them into the store keyed
     (src, dst, label) — get-or-create, evidence last-write-wins
-    (upsert_cfn_edge, neptune_etl_cfn.py:140-165)."""
+    (upsert_cfn_edge, neptune_etl_cfn.py:140-165). Returns the edge
+    count of the version just written, read back from the store so the
+    MERGE runs once."""
     incoming = extract_declared_deps(templates, physical_ids)
     existing = store.read(spark, "cfn_edges")
     if existing is None:
@@ -65,4 +67,4 @@ def run_cfn_etl(
         update_cols=["evidence"],
     )
     store.write(merged, "cfn_edges", version)
-    return merged.count()
+    return store.read_version(spark, "cfn_edges", version).count()

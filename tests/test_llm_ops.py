@@ -3,6 +3,7 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_neptune_spark.operators.dedup import (
@@ -1137,3 +1138,29 @@ def test_curate_corpus_carry_rides_the_scan(spark):
         n = row.pop("n_tokens")
         assert n == want_tokens[did]
         assert row == b[did]
+
+
+def test_curate_corpus_carry_rejects_reserved_keys(spark):
+    """A carry key naming a report column, the id column or the text
+    column fails at the call site instead of producing duplicate,
+    ambiguous columns downstream."""
+    from etl_neptune_spark.operators.text import curate_corpus
+
+    docs = spark.createDataFrame([(1, "a b c")], "id long, body string")
+    n_tokens = F.size(F.split(F.col("body"), " "))
+    for key in ("kept", "content_hash", "dup_count", "id", "body"):
+        with pytest.raises(ValueError, match=f"'{key}'"):
+            curate_corpus(docs, id_col="id", text_col="body", carry={key: n_tokens})
+    # a non-colliding key is still accepted
+    out = curate_corpus(docs, id_col="id", text_col="body", carry={"n_tokens": n_tokens})
+    assert out.columns[-1] == "n_tokens"
+
+
+def test_run_concurrent_edge_arities():
+    """No thunks is an empty result (not a zero-worker pool error); one
+    thunk runs inline; several keep positional order."""
+    from etl_neptune_spark.parallel import run_concurrent
+
+    assert run_concurrent() == []
+    assert run_concurrent(lambda: 7) == [7]
+    assert run_concurrent(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]

@@ -9,10 +9,13 @@ identical state).
 from __future__ import annotations
 
 import json
+import sys
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_neptune_spark.pipelines import run_aws_snapshot_etl, run_cfn_etl
+from etl_neptune_spark.pipelines import corpus
 from etl_neptune_spark.sources import load_table
 from etl_neptune_spark.streaming import GraphStore
 
@@ -20,6 +23,17 @@ from etl_neptune_spark.streaming import GraphStore
 def _snapshot(spark, store, table):
     df = store.read(spark, table)
     return sorted(map(tuple, df.collect()))
+
+
+def _aws_counts_in_store(spark, store):
+    """The aws stats recounted from what the store now holds."""
+    nodes = store.read(spark, "nodes")
+    return {
+        "nodes": nodes.count(),
+        "edges": store.read(spark, "infra_edges").count(),
+        "degraded": nodes.filter(F.col("health_status") == "degraded").count(),
+        "with_metrics": nodes.filter(F.col("order_count").isNotNull()).count(),
+    }
 
 
 def test_aws_pipeline_golden(spark, sf_dir, tmp_path):
@@ -33,6 +47,7 @@ def test_aws_pipeline_golden(spark, sf_dir, tmp_path):
 
     # one node per live entity, one LocatedIn per customer + one
     # Contains per nation
+    assert stats == _aws_counts_in_store(spark, store)
     assert stats["nodes"] == region + nation + customer + supplier
     assert stats["edges"] == nation + customer
     assert 0 < stats["with_metrics"] <= customer
@@ -76,7 +91,8 @@ def test_aws_pipeline_gc_drops_ghosts(spark, sf_dir, tmp_path):
     polluted = nodes.unionByName(ghost, allowMissingColumns=True)
     store.write(polluted, "nodes", 1)
 
-    run_aws_snapshot_etl(spark, sf_dir, store, version=2)
+    stats = run_aws_snapshot_etl(spark, sf_dir, store, version=2)
+    assert stats == _aws_counts_in_store(spark, store)
     assert (
         store.read(spark, "nodes")
         .filter(F.col("name") == "ghost-node-not-in-aws")
@@ -112,13 +128,19 @@ def test_cfn_pipeline_extracts_and_merges(spark, tmp_path):
     n = run_cfn_etl(spark, templates, dims, store, version=0)
     edges = {tuple(r) for r in store.read(spark, "cfn_edges").collect()}
     assert n == 2
+    assert n == store.read(spark, "cfn_edges").count()
     assert ("stack-a", "orders-ddb", "DependsOn", "declared_in:stack-a") in edges
     assert ("stack-a", "fn-physical", "DependsOn", "declared_in:stack-a") in edges
     # 'arn:...' is a RoleArn string ref but resolves to no logical id ⇒ dropped
     assert not any(e[1].startswith("arn:") for e in edges)
 
-    # idempotent re-run
+    # idempotent re-run; a new stack adds its edges to the stored ones
     assert run_cfn_etl(spark, templates, dims, store, version=1) == 2
+    more = templates.union(
+        spark.createDataFrame([("stack-b", json.dumps(tpl))], templates.schema)
+    )
+    n = run_cfn_etl(spark, more, dims, store, version=2)
+    assert n == 4 == store.read(spark, "cfn_edges").count()
 
 
 def test_multi_writer_convergence_st6(spark, sf_dir, tmp_path):
@@ -169,14 +191,69 @@ def test_multi_writer_convergence_st6(spark, sf_dir, tmp_path):
         assert ms2[name] == seen
 
 
+def _sequential_corpus(spark, sf_dir, eval_docs=None, min_quality=0.3, capacity=512):
+    """The corpus pipeline as a plain sequential chain: every stage a
+    filter over the previous stage's frame, every stat its own
+    ``count()``. Slow (each count re-runs the chain) but obviously
+    right, so it is the reference the staged pipeline must match."""
+    from etl_neptune_spark.operators.components import connected_components
+    from etl_neptune_spark.operators.dedup import minhash_lsh_pairs
+    from etl_neptune_spark.operators.packing import assign_split, pack_sequences
+    from etl_neptune_spark.operators.text import (
+        decontaminate, lang_id, quality_score, repetition_features,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    stats = {"raw": docs.count()}
+    rep = repetition_features(docs).select("doc_id", "keep")
+    gated = (
+        docs.join(rep, "doc_id")
+        .withColumn("lang", lang_id(F.col("text")))
+        .withColumn("q", quality_score(F.col("text")))
+        .filter(F.col("keep") & (F.col("lang") == "en") & (F.col("q") >= min_quality))
+        .select("doc_id", "text")
+    )
+    stats["after_quality"] = gated.count()
+    if eval_docs is None:
+        eval_docs = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
+    hits = decontaminate(gated, eval_docs, n=3).select("doc_id")
+    clean = gated.join(hits, "doc_id", "left_anti")
+    stats["after_decontamination"] = clean.count()
+    exact = (
+        clean.withColumn("content_hash", F.md5(F.col("text")))
+        .withColumn("keep_id", F.min("doc_id").over(Window.partitionBy("content_hash")))
+        .filter(F.col("doc_id") == F.col("keep_id"))
+        .select("doc_id", "text")
+    )
+    stats["after_exact_dedup"] = exact.count()
+    comps = connected_components(minhash_lsh_pairs(exact), src="id_a", dst="id_b")
+    losers = comps.filter(F.col("vertex") != F.col("component")).select(
+        F.col("vertex").alias("doc_id")
+    )
+    survivors = exact.join(losers, "doc_id", "left_anti")
+    stats["after_near_dedup"] = survivors.count()
+    train = assign_split(survivors).filter(F.col("split") == "train").select(
+        "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
+    )
+    stats["train_docs"] = train.count()
+    packed = pack_sequences(train, token_col="n_tokens", capacity=capacity)
+    stats["packed_sequences"] = packed.select("seq_id").distinct().count()
+    return sorted(map(tuple, packed.collect())), stats
+
+
 def test_corpus_pipeline_stages_and_determinism(spark, sf_dir):
-    """End-to-end corpus assembly: per-stage counts are monotone
+    """End-to-end corpus assembly: all seven stats and the packed rows
+    equal the sequential reference chain, per-stage counts are monotone
     non-increasing through the gates, survivors are unique by content,
     packing covers every train doc exactly once, and a re-run is
     byte-identical (seedless determinism)."""
     from etl_neptune_spark.pipelines.corpus import run_corpus_pipeline
 
+    want_rows, want_stats = _sequential_corpus(spark, sf_dir)
     packed, stats = run_corpus_pipeline(spark, sf_dir)
+    rows = packed.collect()
+    assert stats == want_stats
+    assert sorted(map(tuple, rows)) == want_rows
     order = ["raw", "after_quality", "after_decontamination",
              "after_exact_dedup", "after_near_dedup", "train_docs"]
     vals = [stats[k] for k in order]
@@ -184,7 +261,6 @@ def test_corpus_pipeline_stages_and_determinism(spark, sf_dir):
     assert stats["raw"] > 0 and stats["train_docs"] > 0
     assert stats["packed_sequences"] >= 1
 
-    rows = packed.collect()
     assert len(rows) == stats["train_docs"]  # one row per train doc
     assert len({r.doc_id for r in rows}) == len(rows)
     assert all(r.seq_id >= 0 and r.n_tokens > 0 for r in rows)
@@ -192,3 +268,45 @@ def test_corpus_pipeline_stages_and_determinism(spark, sf_dir):
     packed2, stats2 = run_corpus_pipeline(spark, sf_dir)
     assert stats2 == stats
     assert sorted(map(tuple, packed2.collect())) == sorted(map(tuple, rows))
+
+
+def test_corpus_pipeline_matches_reference_off_defaults(spark, sf_dir):
+    """The stats and packed rows also match the sequential reference
+    with a caller-supplied eval set and a stricter quality bar."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    eval_docs = docs.filter(F.col("doc_id") % 13 == 0)
+    kw = {"eval_docs": eval_docs, "min_quality": 0.5, "capacity": 256}
+    want_rows, want_stats = _sequential_corpus(spark, sf_dir, **kw)
+    packed, stats = corpus.run_corpus_pipeline(spark, sf_dir, **kw)
+    assert stats == want_stats
+    assert sorted(map(tuple, packed.collect())) == want_rows
+    default_stats = _sequential_corpus(spark, sf_dir)[1]
+    assert stats["after_quality"] < default_stats["after_quality"]
+
+
+def test_corpus_pipeline_releases_its_frames(spark, sf_dir, monkeypatch):
+    """Session hygiene: two runs (each collecting its packed output)
+    leave the same number of persisted RDDs, and every frame the
+    pipeline module itself persists is released before it returns.
+    Operators' own caches (MinHash's shingle frames) are theirs to own
+    and are reused across runs."""
+    cls = type(spark.range(1))
+    persist = cls.persist
+    owned = []
+
+    def tracking_persist(self, *args, **kwargs):
+        if sys._getframe(1).f_globals.get("__name__") == corpus.__name__:
+            owned.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", tracking_persist)
+    counts = []
+    for _ in range(2):
+        packed, _ = corpus.run_corpus_pipeline(spark, sf_dir)
+        packed.collect()
+        counts.append(len(spark.sparkContext._jsc.getPersistentRDDs()))
+    assert counts[1] == counts[0]
+    assert owned, "the pipeline materializes its stage frames"
+    for df in owned:
+        level = df.storageLevel
+        assert not (level.useMemory or level.useDisk), level

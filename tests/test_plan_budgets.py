@@ -21,6 +21,9 @@ Budget history:
   8 more queries pinned, incl. q_bucketed_merge at ZERO runtime
   exchanges — the bytes band catches the one re-execution mode counts
   cannot: the same exchange node run twice accumulates its metrics.
+- q_llm_pipeline broadcast exchanges 4 -> 3: curate_corpus(carry=) folds
+  the token count into the curation scan, removing the semi join that
+  re-read documents (and its broadcast).
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ BUDGETS = {
     "q_upsert_nodes": (2, 0, 0, 41248), # SMJ full-outer MERGE (both sides)
     "q_gc_anti": (1, 1, 0, 2960),       # broadcast anti-join + final agg
     "q_dedup_minhash": (2, 3, 0, 91795),  # banded LSH: band agg + verify
-    "q_llm_pipeline": (4, 4, 2, 25812), # composed stages SHARE 2 exchanges
+    "q_llm_pipeline": (4, 3, 2, 25812), # composed stages SHARE 2 exchanges
     # the shuffle-free co-located MERGE: ZERO runtime exchanges is the
     # whole point of the bucketed layout — pinned at the metric level,
     # not just the plan shape
