@@ -81,7 +81,9 @@ def merge_keyed(
       can pass ``dedupe_order`` — a column name whose GREATEST value
       wins per key (last-write-wins) — to have incoming deduped here.
     """
-    missing = [c for c in (*update_cols, *create_only_cols) if c not in set(existing.columns) | set(incoming.columns)]
+    # Each ``.columns`` is a driver round trip to the JVM: read them once.
+    ex_cols, inc_cols = set(existing.columns), set(incoming.columns)
+    missing = [c for c in (*update_cols, *create_only_cols) if c not in ex_cols | inc_cols]
     if missing:
         raise ValueError(f"merge columns not present in either side: {missing}")
 
@@ -104,17 +106,19 @@ def merge_keyed(
     # re-merging a merge output against one of its own inputs is the
     # normal streaming loop, and object references make Spark reject
     # that as an ambiguous self-join.
-    def side(df: DataFrame, prefix: str, extra: Sequence[str] = ()) -> DataFrame:
+    def side(
+        df: DataFrame, cols: set[str], prefix: str, extra: Sequence[str] = ()
+    ) -> DataFrame:
         picked = []
         for k in keys:
             picked.append(F.col(k).alias(f"{prefix}{k}"))
         for c in (*value_cols, *extra):
-            src = F.col(c) if c in df.columns else F.lit(None)
+            src = F.col(c) if c in cols else F.lit(None)
             picked.append(src.alias(f"{prefix}{c}"))
         return df.select(*picked)
 
-    ex = side(existing, "__ex_", preserve_cols)
-    inc = side(incoming, "__inc_")
+    ex = side(existing, ex_cols, "__ex_", preserve_cols)
+    inc = side(incoming, inc_cols, "__inc_")
 
     if null_safe:
         cond = [F.col(f"__ex_{k}").eqNullSafe(F.col(f"__inc_{k}")) for k in keys]

@@ -1627,10 +1627,14 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "q_stream_ann_ingest: stream did not terminate"
                 )
 
-        run_concurrent(
-            _await_stream,
-            lambda: ivf_append(arrivals, store_b, version=1, state=ivf_state),
-        )
+        try:
+            run_concurrent(
+                _await_stream,
+                lambda: ivf_append(arrivals, store_b, version=1, state=ivf_state),
+            )
+        except BaseException:
+            q.stop()  # a failed thunk raises at once; do not leave the stream running
+            raise
         _tm.mark("stream", rows=_staged_rows(cache))
 
         # streamed-vs-batched answers: two independent reads of two

@@ -202,99 +202,96 @@ def _edge_agg(flows: DataFrame) -> DataFrame:
 
 
 def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
-    """The ``foreachBatch`` body: MERGE nodes, MERGE edges (ST3/ST5),
-    TTL-GC stale nodes (ST4), commit one store version per batch id."""
+    """The ``foreachBatch`` body: MERGE edges (ST3/ST5), then MERGE
+    nodes with TTL-GC (ST4) and degree metrics, committing one store
+    version per batch id — edges first, then nodes. The batch is
+    scanned once: its per-edge aggregate is persisted and both
+    increments, the emptiness guard and the GC horizon come from it."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        edges_inc = _edge_agg(batch).withColumn("active", F.lit(True))
-
-        nodes_inc = (
-            batch.select(F.col("src").cast("string").alias("name"), "ts")
-            .unionByName(batch.select(F.col("dst").cast("string").alias("name"), "ts"))
-            .groupBy("name")
-            .agg(F.max("ts").alias("last_seen"))
-            .withColumn("label", F.lit("Microservice"))
-            .withColumn("created_at", F.col("last_seen"))
-        )
-
-        empty_nodes = spark.createDataFrame([], nodes_inc.schema)
-        nodes_cur = store.read(spark, "nodes") or empty_nodes
-        # ST6 multi-writer convergence: pass through columns owned by
-        # the other pipelines (aws enrichment, health, …) untouched;
-        # degree columns are recomputed below, so they are NOT preserved.
-        own = {"label", "name", "last_seen", "created_at"}
-        degree_cols = {"out_degree", "in_degree", "out_weight", "is_entry_point"}
-        preserve = [
-            c for c in nodes_cur.columns if c not in own and c not in degree_cols
-        ]
-        nodes_merged = merge_keyed(
-            nodes_cur,
-            nodes_inc,
-            keys=["label", "name"],
-            update_cols=["last_seen"],
-            create_only_cols=["created_at"],
-            preserve_cols=preserve,
-        )
-        # ST4: retention — OWN label only (per-writer GC, like the
-        # reference's per-label anti-joins): Microservice nodes unseen
-        # past the TTL are dropped; other writers' labels pass through.
-        horizon = batch.agg(F.max("ts")).first()[0]
-        nodes_final = nodes_merged.filter(
-            (F.col("label") != "Microservice")
-            | (F.col("last_seen") >= F.lit(horizon) - F.expr(f"INTERVAL {NODE_TTL}"))
-        )
-
-        empty_edges = spark.createDataFrame([], edges_inc.schema)
-        edges_cur = store.read(spark, "edges") or empty_edges
-        edges_merged = merge_keyed(
-            edges_cur,
-            edges_inc,
-            keys=["src", "dst", "protocol"],
-            update_cols=[
-                "calls",
-                "avg_duration_ms",
-                "error_count",
-                "last_seen",
-                "active",
-            ],
-        )
-        # ST5: edges in this batch carry active=true via the merge;
-        # absent edges keep their previous active + last_seen stamp
-        # (implicit decay — the reference has no edge GC, downstream
-        # consumers filter on last_seen).
-
-        # §3.1 step 8: per-service degree metrics join-updated onto the
-        # nodes (the reference's batch_fetch_dependency_and_update,
-        # neptune_etl_deepflow.py:536-617) — computed from the MERGED
-        # edge state so decayed-but-alive edges still count.
-        degrees = degree_metrics(edges_merged, weight="calls").select(
-            F.col("node").cast("string").alias("name"),
-            "out_degree",
-            "in_degree",
-            "out_weight",
-            "is_entry_point",
-        )
-        ms = (
-            nodes_final.filter(F.col("label") == "Microservice")
-            .join(degrees, "name", "left")
-            .na.fill({"out_degree": 0, "in_degree": 0, "out_weight": 0})
-            .withColumn(
-                "is_entry_point",
-                F.coalesce(F.col("is_entry_point"), F.lit(True)),
-            )
-        )
-        nodes_deg = ms.unionByName(
-            nodes_final.filter(F.col("label") != "Microservice"),
-            allowMissingColumns=True,
-        )
-
-        store.write(nodes_deg, "nodes", batch_id)
-        store.write(edges_merged, "edges", batch_id)
+        edges_inc = _edge_agg(batch).withColumn("active", F.lit(True)).persist()
+        try:
+            [(n_edges, horizon)] = edges_inc.agg(
+                F.count("*"), F.max("last_seen")  # bounded: one global-agg row
+            ).collect()
+            if n_edges:
+                _merge_batch(store, edges_inc, horizon, batch_id)
+        finally:
+            edges_inc.unpersist()
 
     return apply
+
+
+def _merge_batch(
+    store: GraphStore, edges_inc: DataFrame, horizon, batch_id: int
+) -> None:
+    """MERGE a non-empty batch: edges, then nodes (``horizon``: its max ts)."""
+    spark = edges_inc.sparkSession
+    edges_merged = merge_keyed(
+        store.read(spark, "edges") or spark.createDataFrame([], edges_inc.schema),
+        edges_inc,
+        keys=["src", "dst", "protocol"],
+        update_cols=["calls", "avg_duration_ms", "error_count", "last_seen", "active"],
+    )
+    # ST5: edges in this batch carry active=true via the merge; absent
+    # edges keep their previous active + last_seen stamp (implicit decay
+    # — the reference has no edge GC, downstream consumers filter on
+    # last_seen). Written first: the degrees below read the merged
+    # edges back from this version instead of re-running the MERGE; a
+    # replay after a crash before the nodes write re-merges the same
+    # increment into it, which changes nothing (last-write-wins).
+    store.write(edges_merged, "edges", batch_id)
+
+    # Nodes from the edge increment: the max of per-edge maxima is the row max.
+    nodes_inc = (
+        edges_inc.select(F.col("src").cast("string").alias("name"), "last_seen")
+        .unionByName(
+            edges_inc.select(F.col("dst").cast("string").alias("name"), "last_seen")
+        )
+        .groupBy("name")
+        .agg(F.max("last_seen").alias("last_seen"))
+        .withColumn("label", F.lit("Microservice"))
+        .withColumn("created_at", F.col("last_seen"))
+    )
+    nodes_cur = store.read(spark, "nodes") or spark.createDataFrame([], nodes_inc.schema)
+    # ST6 multi-writer convergence: pass through columns owned by
+    # the other pipelines (aws enrichment, health, …) untouched;
+    # degree columns are recomputed below, so they are NOT preserved.
+    own = {"label", "name", "last_seen", "created_at"}
+    degree_cols = ["out_degree", "in_degree", "out_weight", "is_entry_point"]
+    preserve = [
+        c for c in nodes_cur.columns if c not in own and c not in degree_cols
+    ]
+    nodes_merged = merge_keyed(
+        nodes_cur,
+        nodes_inc,
+        keys=["label", "name"],
+        update_cols=["last_seen"],
+        create_only_cols=["created_at"],
+        preserve_cols=preserve,
+    )
+    # ST4: retention — OWN label only (per-writer GC, like the
+    # reference's per-label anti-joins): Microservice nodes unseen
+    # past the TTL are dropped; other writers' labels pass through.
+    own_label = F.col("label") == "Microservice"
+    nodes_final = nodes_merged.filter(
+        ~own_label
+        | (F.col("last_seen") >= F.lit(horizon) - F.expr(f"INTERVAL {NODE_TTL}"))
+    )
+
+    # §3.1 step 8: per-service degree metrics join-updated onto the
+    # nodes (the reference's batch_fetch_dependency_and_update,
+    # neptune_etl_deepflow.py:536-617) — computed from the MERGED
+    # edge state so decayed-but-alive edges still count. Only the own
+    # label gets them; other labels keep NULL degree columns.
+    degrees = degree_metrics(
+        store.read_version(spark, "edges", batch_id), weight="calls"
+    ).select(F.col("node").cast("string").alias("name"), *degree_cols)
+    fill = {"out_degree": 0, "in_degree": 0, "out_weight": 0, "is_entry_point": True}
+    nodes_deg = nodes_final.join(F.broadcast(degrees), "name", "left").withColumns(
+        {c: F.when(own_label, F.coalesce(c, F.lit(v))) for c, v in fill.items()}
+    )
+    store.write(nodes_deg, "nodes", batch_id)
 
 
 def apply_health_alarms(

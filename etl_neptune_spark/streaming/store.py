@@ -21,6 +21,20 @@ pointer file via atomic rename. Properties:
   write-version / prune) is what a ``MERGE INTO``-backed impl would
   keep.
 
+- **Schema sidecar**: every published directory (``v=<n>``,
+  ``delta=<n>``) carries ``_schema.json``, the Spark schema of its data
+  columns (hive-partition columns are still discovered from the paths).
+  Reads pass it to ``spark.read.schema``, so opening a snapshot fires
+  no schema-inference job; Spark's file listing skips ``_``-prefixed
+  files. A directory without one (an older build's) is inferred.
+
+Layout of one table::
+
+    <root>/<table>/_LATEST            committed version (the commit point)
+    <root>/<table>/_PARTITION_BY      hive-partition columns of _LATEST
+    <root>/<table>/v=<n>/             snapshot: part-*.parquet + _schema.json
+    <root>/<table>/delta=<n>/         appended rows: part-*.parquet + _schema.json
+
 At 100 TB the same layout holds with the table partitioned by
 ``label`` (+ bucketed by key for shuffle-free merges); old versions
 are pruned after each flip.
@@ -28,10 +42,34 @@ are pruned after each flip.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
+
+
+def _write_schema(
+    directory: str, schema: StructType, partition_by: tuple[str, ...] = ()
+) -> None:
+    """Record the data columns' schema inside a staging directory."""
+    data = StructType([f for f in schema.fields if f.name not in partition_by])
+    with open(os.path.join(directory, SCHEMA_FILE), "w") as f:
+        f.write(data.json())
+
+
+def _read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read published directories with the first one's recorded schema,
+    skipping Parquet schema inference, which costs a Spark job per read."""
+    sidecar = os.path.join(paths[0], SCHEMA_FILE)
+    if not os.path.exists(sidecar):
+        return spark.read.parquet(*paths)
+    with open(sidecar) as f:
+        schema = StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class GraphStore:
@@ -91,8 +129,9 @@ class GraphStore:
         ]
         if not deltas:
             return base
-        ddf = spark.read.parquet(
-            *[os.path.join(self._table_dir(table), f"delta={d}") for d in deltas]
+        ddf = _read_parquet(
+            spark,
+            *[os.path.join(self._table_dir(table), f"delta={d}") for d in deltas],
         )
         return ddf if base is None else base.unionByName(ddf)
 
@@ -114,7 +153,7 @@ class GraphStore:
             if not os.path.isdir(retired):
                 return None
             path = retired
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
 
     def versions(self, table: str) -> list[int]:
         """Retained snapshot versions, oldest first. A crash-window
@@ -167,6 +206,7 @@ class GraphStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
+        _write_schema(staging, df.schema, partition_by)
         self._publish_staged(table, version, staging, partition_by)
 
     def write_arrow(self, tbl, table: str, version: int) -> None:
@@ -182,12 +222,14 @@ class GraphStore:
         Spark reader expects; ``spark.read.parquet`` sees the same
         types it would from a Spark-written snapshot."""
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         tdir = self._table_dir(table)
         staging = os.path.join(tdir, f".staging-v={version}")
         shutil.rmtree(staging, ignore_errors=True)
         os.makedirs(staging)
         pq.write_table(tbl, os.path.join(staging, "part-00000.parquet"))
+        _write_schema(staging, from_arrow_schema(tbl.schema))
         self._publish_staged(table, version, staging, ())
 
     def _publish_staged(
@@ -252,6 +294,7 @@ class GraphStore:
         staging = os.path.join(tdir, f".staging-delta={version}")
         shutil.rmtree(staging, ignore_errors=True)
         df.write.mode("overwrite").parquet(staging)
+        _write_schema(staging, df.schema)
         # Same crash-safe publish order as ``write``: the retired copy
         # survives until the staged dir lands (a replayed batch rewrites
         # this delta anyway, but the ordering keeps every cut readable).

@@ -1164,3 +1164,31 @@ def test_run_concurrent_edge_arities():
     assert run_concurrent() == []
     assert run_concurrent(lambda: 7) == [7]
     assert run_concurrent(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+
+
+def test_run_concurrent_raises_without_waiting(spark):
+    """A failing thunk raises at once, while another thunk is still
+    blocked: the call does not hold the failure until every thunk has
+    finished (a streaming certificate could hold it for 600 s)."""
+    import threading
+    import time
+
+    from etl_neptune_spark.parallel import run_concurrent
+
+    release = threading.Event()
+
+    def fail():
+        raise ValueError("first failure")
+
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(ValueError, match="first failure"):
+            run_concurrent(lambda: release.wait(60), fail)
+        assert time.monotonic() - t0 < 2.0
+    finally:
+        release.set()
+    # success keeps thunk order even when the later thunk finishes first
+    assert run_concurrent(lambda: time.sleep(0.2) or "slow", lambda: "fast") == [
+        "slow",
+        "fast",
+    ]

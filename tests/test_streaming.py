@@ -1225,3 +1225,62 @@ def test_compact_crash_before_delta_removal_rereads_and_reruns(spark, tmp_path):
     store.compact(spark, "codes", version=3)
     assert store.delta_versions("codes") == []
     assert {(r.k, r.val) for r in store.read(spark, "codes").collect()} == merged
+
+
+def test_store_reads_use_schema_sidecar(spark, tmp_path):
+    """Every publish path (``write``, partitioned ``write``,
+    ``write_arrow``, ``append_delta``) records its data columns in
+    ``_schema.json``: reads return exactly the schema Parquet inference
+    gives, fire no Spark job (inference costs one per read), and a
+    directory without a sidecar (an older build's) still reads."""
+    import pyarrow as pa
+
+    from etl_neptune_spark.streaming.store import SCHEMA_FILE
+
+    store = GraphStore(str(tmp_path / "store"))
+    df = spark.range(12).selectExpr(
+        "id AS k",
+        "CAST(id % 3 AS INT) AS cell",
+        "CAST(id AS STRING) AS s",
+        "timestamp_seconds(id * 3600) AS ts",
+        "array(CAST(id AS FLOAT), 0.5F) AS a",
+    )
+    store.write(df, "plain", 0)
+    store.write(df, "part", 0, partition_by=("cell",))
+    store.write_arrow(
+        pa.table(
+            {
+                "cell": pa.array([1, 2], pa.int32()),
+                "centroid": pa.array([[1.0, 0.5], [2.0, 0.0]], pa.list_(pa.float32())),
+            }
+        ),
+        "arrow",
+        0,
+    )
+    store.append_delta(df, "delta", 1)
+
+    def read(table):
+        return store.read(spark, table) if table == "delta" else store.read_version(spark, table, 0)
+
+    sc = spark.sparkContext
+    for table, sub in {"plain": "v=0", "part": "v=0", "arrow": "v=0", "delta": "delta=1"}.items():
+        path = tmp_path / "store" / table / sub
+        assert (path / SCHEMA_FILE).exists(), table
+        group = f"sidecar-read-{table}"
+        sc.setJobGroup(group, "store read")
+        try:
+            got = read(table)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(jobs) == [], table
+        inferred = spark.read.parquet(str(path))
+        assert got.schema == inferred.schema, table
+        rows = sorted(inferred.collect())
+        assert sorted(got.collect()) == rows, table
+
+        (path / SCHEMA_FILE).unlink()
+        legacy = read(table)
+        assert legacy.schema == inferred.schema, table
+        assert sorted(legacy.collect()) == rows, table
